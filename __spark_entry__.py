@@ -594,16 +594,14 @@ def q_a17(spark: SparkSession, sf: str) -> DataFrame:
     e = load_events(spark, sf)
     out = e.groupBy("event_type").agg(
         F.percentile_approx("value", 0.5, 10000).alias("approx_p50"),
-        F.percentile("value", 0.49).alias("p49"),
-        F.percentile("value", 0.5).alias("p50"),
-        F.percentile("value", 0.51).alias("p51"),
+        # p49/p50/p51 from one exact buffer per group
+        F.percentile("value", [0.49, 0.5, 0.51]).alias("q"),
     )
+    q = F.col("q")
     return out.select(
         "event_type",
-        ((F.col("approx_p50") >= F.col("p49")) & (F.col("approx_p50") <= F.col("p51")))
-        .cast("int")
-        .alias("in_rank_window"),
-        precision.micro_round("p50", "exact_p50", scale=4),
+        ((F.col("approx_p50") >= q[0]) & (F.col("approx_p50") <= q[2])).cast("int").alias("in_rank_window"),
+        precision.micro_round(q[1], "exact_p50", scale=4),
     ).orderBy("event_type")
 
 
@@ -2805,8 +2803,11 @@ def q_mm8(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
+G8_SEEDS = ["P1", "P2"]
+
+
 def q_g8(spark: SparkSession, sf: str) -> DataFrame:
-    """3-hop BFS reachability from seed parts {P1, P2} over the
+    """3-hop BFS reachability from the seed parts G8_SEEDS over the
     UNDIRECTED order<->part graph (graph.k_hop_distances): exact min-hop
     distances, frontier-driven expansion, all-integer state.  Oracle:
     3 unrolled frontier CTEs (join - EXCEPT - union per hop).
@@ -2824,13 +2825,8 @@ def q_g8(spark: SparkSession, sf: str) -> DataFrame:
         (F.col("l_partkey") * 2 + 1).alias("dst"),
     )
     edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # seeds P1, P2 -> 2*1+1, 2*2+1
-    res = graph.k_hop_distances(edges, [3, 5], max_hops=3)
-    decoded = F.concat(
-        F.when(F.col("id") % 2 == 0, F.lit("O")).otherwise(F.lit("P")),
-        F.shiftright(F.col("id"), 1).cast("string"),
-    )
-    return res.select(decoded.alias("id"), "hops").orderBy("id")
+    res = graph.k_hop_distances(edges, [_encode_op_id(s) for s in G8_SEEDS], max_hops=3)
+    return res.select(_decode_op_id(F.col("id")).alias("id"), "hops").orderBy("id")
 
 
 def q_lp1(spark: SparkSession, sf: str) -> DataFrame:
@@ -2918,6 +2914,18 @@ def _prepared_pagerank_edges(spark: SparkSession, sf: str, kind: str) -> DataFra
     return handle
 
 
+def _encode_op_id(s: str) -> int:
+    """Contract vertex string ("O%d" / "P%d") to its int64 loop id
+    (order 2k, part 2k+1): the seed-side encoding of _decode_op_id."""
+    k = int(s[1:])
+    return 2 * k if s[0] == "O" else 2 * k + 1
+
+
+def _sql_str_list(xs) -> str:
+    """Seed constants as a SQL string-literal list body: 'P1', 'P2'."""
+    return ", ".join(f"'{x}'" for x in xs)
+
+
 def _decode_op_id(col):
     """int64 order/part vertex id (2k / 2k+1) back to the contract string
     ("O%d" / "P%d") -- the inverse of the _prepared_pagerank_edges / q_g8 /
@@ -2961,11 +2969,11 @@ def q_ppr(spark: SparkSession, sf: str) -> DataFrame:
     order<->part graph: proximity-to-seeds ranking (the related-items
     primitive), with the same integer-quantized full-depth oracle replay
     as g4/g5 (operators/graph.personalized_pagerank)."""
-    # PPR_SEEDS encode as 2k+1 (parts); trajectory is seed-SET driven, so
-    # only the membership matters -- decode before the top-k as in g4/g5
+    # trajectory is seed-SET driven, so only the membership matters --
+    # decode before the top-k as in g4/g5
     ranks = graph.personalized_pagerank(
         None,
-        [2 * int(s[1:]) + 1 for s in PPR_SEEDS],
+        [_encode_op_id(s) for s in PPR_SEEDS],
         reset_prob=0.15,
         max_iter=10,
         weighted=_prepared_pagerank_edges(spark, sf, "cyclic"),
@@ -4183,7 +4191,7 @@ def _g14_oracle_sql(seeds: list[str], hops: int) -> str:
     over the quantity-weighted order<->part graph.  Every round CTE is AS
     MATERIALIZED (each references the previous twice -- the g13 inlining
     lesson)."""
-    seed_list = ", ".join(f"'{s}'" for s in seeds)
+    seed_list = _sql_str_list(seeds)
     ctes = [
         """f AS MATERIALIZED (
               SELECT 'O' || CAST(l_orderkey AS VARCHAR) AS src,
@@ -4215,7 +4223,7 @@ G14_SEEDS = ["P1", "P2"]
 
 def q_g14(spark: SparkSession, sf: str) -> DataFrame:
     """Bounded-hop weighted shortest paths (graph.weighted_shortest_paths):
-    min-plus Bellman-Ford from seed parts {P1, P2} over the order<->part
+    min-plus Bellman-Ford from the seed parts G14_SEEDS over the order<->part
     graph with integer-micro quantity edge costs -- the weighted twin of
     g8's BFS (hops count there; cost accumulates here).  3 synchronous
     relaxation rounds, exact integer arithmetic, edge table repartitioned
@@ -4233,13 +4241,8 @@ def q_g14(spark: SparkSession, sf: str) -> DataFrame:
         w,
     )
     edges = fwd.unionByName(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w"))
-    # G14_SEEDS = ["P1", "P2"] -> 2*1+1, 2*2+1
-    res = graph.weighted_shortest_paths(edges, [3, 5], max_hops=3)
-    decoded = F.concat(
-        F.when(F.col("id") % 2 == 0, F.lit("O")).otherwise(F.lit("P")),
-        F.shiftright(F.col("id"), 1).cast("string"),
-    )
-    return res.select(decoded.alias("id"), "dist").orderBy("id")
+    res = graph.weighted_shortest_paths(edges, [_encode_op_id(s) for s in G14_SEEDS], max_hops=3)
+    return res.select(_decode_op_id(F.col("id")).alias("id"), "dist").orderBy("id")
 
 
 def _hits_oracle(edges_sql: str, rounds: int = 3, quantum: int = 1_000_000, k: int = 20) -> str:
@@ -5274,7 +5277,7 @@ def _ppr_oracle(edges_sql: str, sources: list, reset: float = 0.15, max_iter: in
     r = f"CAST({reset!r} AS DOUBLE)"
     d = f"CAST({1.0 - reset!r} AS DOUBLE)"
     s = f"CAST({int(scale)} AS DOUBLE)"
-    lst = ", ".join(f"'{x}'" for x in sources)
+    lst = _sql_str_list(sources)
     reset_dst = f"CASE WHEN w.dst IN ({lst}) THEN {r} ELSE CAST(0.0 AS DOUBLE) END"
     init_src = f"CASE WHEN w.src IN ({lst}) THEN CAST(1.0 AS DOUBLE) ELSE CAST(0.0 AS DOUBLE) END"
     absent_src = f"CASE WHEN w.src IN ({lst}) THEN {r} ELSE CAST(0.0 AS DOUBLE) END"
@@ -9420,11 +9423,11 @@ def oracle_sql() -> dict[str, str]:
             SELECT id, label FROM l2 ORDER BY id
         """,
         # BFS replay: one (join, EXCEPT, union) triple per hop, unrolled.
-        "g8_khop_reachability": """
+        "g8_khop_reachability": f"""
             WITH f AS (SELECT 'O' || CAST(l_orderkey AS VARCHAR) AS src,
                               'P' || CAST(l_partkey AS VARCHAR) AS dst FROM lineitem),
             e AS (SELECT src, dst FROM f UNION ALL SELECT dst, src FROM f),
-            d0 AS (SELECT unnest(['P1', 'P2']) AS id),
+            d0 AS (SELECT unnest([{_sql_str_list(G8_SEEDS)}]) AS id),
             r1 AS (SELECT DISTINCT e.dst AS id FROM e JOIN d0 ON e.src = d0.id),
             n1 AS (SELECT id FROM r1 EXCEPT SELECT id FROM d0),
             v1 AS (SELECT id FROM d0 UNION SELECT id FROM n1),

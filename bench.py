@@ -298,6 +298,42 @@ STDOUT_QUERIES = [
 ]
 
 
+def stdout_line(headline: dict, timings: dict[str, float], budget: int = 1500) -> str:
+    """The one-line JSON record for stdout.
+
+    Round records keep only the trailing 2000 BYTES of combined output
+    (measured: BENCH_r06.json tail len == 2000, r6's 110-query line
+    ~3.4 KB -> truncated head, "parsed": null).  The stdout line must
+    therefore fit that tail WITH slack for any log line that races in
+    after it: cap it at ``budget`` bytes.  Membership of the printed
+    subset is FIXED (STDOUT_QUERIES) -- the r10 cost-ordered eliding
+    made the printed SET depend on boot noise, so every PERF round
+    reported phantom dropped_from_bench/new_in_bench churn (VERDICT r10
+    item 6).  If the fixed subset ever overflows the
+    budget (timings growing a digit), DECIMALS degrade (3 -> 2 -> 1),
+    never membership; the 1-decimal render is returned even if it still
+    overflows, never the full map.  The full 110-query map with
+    3-decimals precision is always in BENCH_DETAIL.json.
+    """
+    line = json.dumps(headline, separators=(",", ":"))
+    if len(line) <= budget:
+        return line
+    kept = {k: timings[k] for k in STDOUT_QUERIES if k in timings}
+    for ndigits in (3, 2, 1):
+        line = json.dumps(
+            dict(
+                headline,
+                queries={k: round(v, ndigits) for k, v in kept.items()},
+                queries_elided=len(timings) - len(kept),
+                detail="BENCH_DETAIL.json",
+            ),
+            separators=(",", ":"),
+        )
+        if len(line) <= budget:
+            break
+    return line
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -396,33 +432,7 @@ def main() -> None:
             indent=1,
             sort_keys=True,
         )
-    # The driver's round record keeps only the trailing 2000 BYTES of
-    # combined output (measured: BENCH_r06.json tail len == 2000, r6's
-    # 110-query line ~3.4 KB -> truncated head, "parsed": null).  The
-    # stdout line must therefore fit the buffer WITH slack for any log
-    # line that races in after it: cap it at 1500 bytes.  Membership of
-    # the printed subset is FIXED (STDOUT_QUERIES below) -- the r10
-    # cost-ordered eliding made the printed SET depend on boot noise, so
-    # every PERF round reported phantom dropped_from_bench/new_in_bench
-    # churn (VERDICT r10 item 6).  If the fixed subset ever overflows the
-    # budget (timings growing a digit), DECIMALS degrade (3 -> 2 -> 1),
-    # never membership.  The full 110-query map with 3-decimals precision
-    # is always in BENCH_DETAIL.json.
-    budget = 1500
-    line = json.dumps(headline, separators=(",", ":"))
-    if len(line) > budget:
-        kept = {k: timings[k] for k in STDOUT_QUERIES if k in timings}
-        for ndigits in (3, 2, 1):
-            trial = dict(
-                headline,
-                queries={k: round(v, ndigits) for k, v in kept.items()},
-                queries_elided=len(timings) - len(kept),
-                detail="BENCH_DETAIL.json",
-            )
-            s = json.dumps(trial, separators=(",", ":"))
-            if len(s) <= budget:
-                line = s
-                break
+    line = stdout_line(headline, timings)
     sys.stdout.flush()
     print(line)
     sys.stdout.flush()

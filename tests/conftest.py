@@ -42,3 +42,21 @@ def videos(spark):
     return spark.createDataFrame(
         rows, "video_id string, uploader string, category string, length int, views long, rate double, related array<string>"
     )
+
+
+@pytest.fixture
+def run_counting_jobs(spark):
+    """``run(group, fn) -> (fn(), n)``: n is the number of Spark jobs fn
+    launched, read from the status store under a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -3,6 +3,8 @@ FIXTURES.md invariants 1/4/5/6)."""
 
 from __future__ import annotations
 
+import pytest
+
 from youtubeanalyzerproject_big_data__spark.operators import aggregates as agg
 
 LENGTH_BUCKETS = [(240, "1_short"), (1200, "2_medium")]
@@ -226,3 +228,88 @@ def test_dec_avg_exact_half_case_matches_oracle(spark):
     for name, _, expected in cases:
         assert got[name] == expected, (name, got[name])
         assert oracle[name] == expected, (name, oracle[name])
+
+
+def _per_quantile(df, keys, value_col, ps, approx=False):
+    """The former shape: one percentile aggregate per quantile."""
+    from pyspark.sql import functions as F
+
+    from youtubeanalyzerproject_big_data__spark.functions.precision import micro_round
+
+    c = F.col(value_col)
+    one = (lambda p: F.percentile_approx(c, p, F.lit(10000))) if approx else (lambda p: F.percentile(c, p))
+    aggs = [micro_round(one(p), f"p{int(p * 100)}", scale=4) for p in ps]
+    return (df.groupBy(*keys) if keys else df).agg(*aggs)
+
+
+def _pct_fixture(spark):
+    # group a: values with NULLs; b: one row; c: only NULLs
+    rows = [("a", 5.0), ("a", None), ("a", 1.0), ("a", 7.5), ("a", 2.25), ("a", None), ("b", 3.0), ("c", None)]
+    return spark.createDataFrame(rows, "g string, v double")
+
+
+def test_array_percentile_matches_per_quantile_global(spark):
+    from pyspark.sql import functions as F
+
+    df = _pct_fixture(spark)
+    for part in (df, df.where(F.col("g") == "b"), df.where(F.lit(False)), df.where(F.col("g") == "c")):
+        got = agg.global_stats(part, "v").select("p50_val", "p90_val").collect()
+        want = _per_quantile(part, [], "v", (0.5, 0.9)).collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+    empty = agg.global_stats(df.where(F.lit(False)), "v").collect()[0]
+    assert empty["p50_val"] is None and empty["p90_val"] is None
+
+
+@pytest.mark.parametrize("approx", [False, True])
+def test_array_percentile_matches_per_quantile_grouped(spark, approx):
+    from pyspark.sql import functions as F
+
+    df = _pct_fixture(spark)
+    ps = (0.25, 0.5, 0.75, 0.9)
+    for part in (df, df.where(F.col("g") == "a"), df.where(F.lit(False))):
+        got = agg.grouped_percentiles(part, "g", "v", ps, approx=approx).drop("cnt").orderBy("g").collect()
+        want = _per_quantile(part, ["g"], "v", ps, approx=approx).orderBy("g").collect()
+        assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_global_stats_keeps_one_percentile_buffer(spark):
+    from youtubeanalyzerproject_big_data__spark.plans.inspect import executed_plan
+
+    df = _pct_fixture(spark)
+    out = agg.global_stats(df, "v")
+    out.collect()
+    agg_lines = [ln for ln in executed_plan(out).splitlines() if "HashAggregate" in ln]
+    assert agg_lines and all(ln.count("percentile(") == 1 for ln in agg_lines)
+
+
+def test_a17_array_percentiles_match_per_quantile(spark, tmp_path):
+    """q_a17's p49/p50/p51 come from one array call; replay the former
+    three scalar calls on the same events and compare the output rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entrymod
+    from youtubeanalyzerproject_big_data__spark.functions.precision import micro_round
+    from youtubeanalyzerproject_big_data__spark.io import load_events
+
+    n = 301
+    types = ["click" if i % 3 else "view" for i in range(n - 1)] + ["buy"]  # "buy": one row
+    values = [None if i % 17 == 0 else (i * 7919 % 1000) / 8 for i in range(n)]
+    ts = pa.array([1_700_000_000_000_000_000 + i for i in range(n)], pa.timestamp("ns"))
+    pq.write_table(pa.table({"event_type": types, "value": values, "ts": ts}), tmp_path / "events.parquet")
+
+    got = [tuple(r) for r in entrymod.q_a17(spark, str(tmp_path)).collect()]
+    old = load_events(spark, str(tmp_path)).groupBy("event_type").agg(
+        F.percentile_approx("value", 0.5, 10000).alias("approx_p50"),
+        F.percentile("value", 0.49).alias("p49"),
+        F.percentile("value", 0.5).alias("p50"),
+        F.percentile("value", 0.51).alias("p51"),
+    )
+    want = old.select(
+        "event_type",
+        ((F.col("approx_p50") >= F.col("p49")) & (F.col("approx_p50") <= F.col("p51"))).cast("int").alias("in_rank_window"),
+        micro_round("p50", "exact_p50", scale=4),
+    ).orderBy("event_type")
+    assert len(got) == 3
+    assert got == [tuple(r) for r in want.collect()]

@@ -107,6 +107,15 @@ def test_connected_components_self_loop_vertex_kept(spark):
     assert out == {5: 5, 1: 1, 2: 1}
 
 
+def test_connected_components_drops_null_endpoint_edges(spark):
+    """An edge with a NULL endpoint asserts nothing: least/greatest skip
+    NULLs, so without the filter (NULL, 7) became a (7, 7) self-loop and
+    invented vertex 7."""
+    edges = spark.createDataFrame([(None, 7), (8, None), (None, None), (1, 2)], "src long, dst long")
+    out = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
+    assert out == {1: 1, 2: 1}
+
+
 def test_label_propagation_zero_iterations_identity(spark):
     """max_iter=0 returns identity labels (ADVICE r10: the delta loop left
     cur unset and crashed on the final join)."""
@@ -253,6 +262,47 @@ def test_weighted_shortest_paths_integer_ids(spark):
     e = spark.createDataFrame([(2, 3, 10), (3, 4, 1), (2, 4, 20)], "src long, dst long, w long")
     out = {r["id"]: r["dist"] for r in weighted_shortest_paths(e, [2], max_hops=3).collect()}
     assert out == {2: 0, 3: 10, 4: 11}  # 2->3->4 beats direct 2->4
+
+
+@pytest.mark.parametrize(
+    "seeds, ddl",
+    [([5, 3, 5], "src long, dst long"), (["P2", "P1", "P2"], "src string, dst string"), ([], "src long, dst long")],
+)
+def test_seed_frame_is_local_relation(spark, seeds, ddl):
+    """g8/g14 seeds: deduplicated in Python, typed like the edge ids, and
+    planned as a LocalRelation (no RDD scan, so no distinct/checkpoint
+    jobs) -- checked through the operator itself at zero hops."""
+    e = spark.createDataFrame([], ddl)
+    visited = graph.k_hop_distances(e, seeds, max_hops=0)
+    assert visited.schema["id"].dataType == e.schema["src"].dataType
+    assert visited._jdf.queryExecution().optimizedPlan().toString().startswith("LocalRelation")
+    assert sorted(r["id"] for r in visited.collect()) == sorted(set(seeds))
+    assert {r["hops"] for r in visited.collect()} <= {0}
+
+
+def test_weighted_shortest_paths_local_seeds_save_two_jobs(spark, monkeypatch, run_counting_jobs):
+    """The LocalRelation seed frame saves the shuffle job of an RDD-backed
+    distinct() and the job of its eager checkpoint, counted in the status
+    store against the former RDD-backed construction."""
+    from pyspark.sql.types import StructField, StructType
+
+    e = spark.createDataFrame([(2, 3, 10), (3, 4, 1), (2, 4, 20)], "src long, dst long, w long")
+    expected = {2: 0, 3: 10, 4: 11}
+
+    def run(tag):
+        rows, n = run_counting_jobs(tag, lambda: graph.weighted_shortest_paths(e, [2, 2], 3).collect())
+        assert {r["id"]: r["dist"] for r in rows} == expected
+        return n
+
+    now = run("wsp-local-seeds")
+
+    def rdd_seed_frame(spark, seeds, id_type):
+        schema = StructType([StructField("id", id_type)])
+        return spark.createDataFrame([(s,) for s in seeds], schema).distinct().transform(graph._ckpt)
+
+    monkeypatch.setattr(graph, "_seed_frame", rdd_seed_frame)
+    before = run("wsp-rdd-seeds")
+    assert now <= before - 2, (now, before)
 
 
 def test_label_propagation_two_triangles(spark):

@@ -11,24 +11,76 @@ pushdown, splittable -- the right at-rest layout for 100 TB), and the JSON
 
 from __future__ import annotations
 
+import functools
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from youtubeanalyzerproject_big_data__spark.schema import TESTDATA_TABLES
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
+# Session confs that change what parquet schema inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+
+def _file_stamp(path: str) -> tuple:
+    """(name, size, mtime_ns) of ``path`` and, for a directory, of every
+    entry under it.  Raises OSError when ``path`` is not a local path."""
+    st = os.stat(path)
+    out = [("", st.st_size, st.st_mtime_ns)]
+    if stat.S_ISDIR(st.st_mode):
+        for root, dirs, files in os.walk(path):
+            dirs.sort()
+            for name in sorted(dirs + files):
+                full = os.path.join(root, name)
+                s = os.stat(full)
+                out.append((os.path.relpath(full, path), s.st_size, s.st_mtime_ns))
+    return tuple(out)
+
+
+@functools.lru_cache(maxsize=64)
+def _inferred_schema(spark: SparkSession, path: str, stamp: tuple, confs: tuple) -> StructType:
+    # stamp and confs are memo key parts only.  Entries are per session
+    # (inference runs in it) and hold it; maxsize bounds both.
+    return spark.read.parquet(path).schema
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` with the inferred schema memoized.
+
+    Inference reads the parquet footers in a Spark job of its own on every
+    call; with a known schema the reader skips it.  The memo is keyed by
+    the path, the size and mtime of every file under it and the inference
+    confs, so a rewritten file is re-inferred.  A path that cannot be
+    stat'ed locally (missing, or a remote URI) goes to the plain reader,
+    which raises Spark's PATH_NOT_FOUND for a missing one."""
+    try:
+        stamp = _file_stamp(path)
+    except OSError:
+        return spark.read.parquet(path)
+    confs = tuple(spark.conf.get(k, None) for k in _SCHEMA_CONFS)
+    return spark.read.schema(_inferred_schema(spark, path, stamp, confs)).parquet(path)
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one benchmark table (S5 analog: full-collection scan -> DataFrame).
 
-    Plain ``spark.read.parquet``: Catalyst pushes filters and prunes columns
-    into the scan, which replaces the reference's manual
-    ``.select("_id","related")`` pruning (PageRank_Spark_v5.py:51-57).
+    A plain parquet scan (schema memoized, see :func:`_read_parquet`):
+    Catalyst pushes filters and prunes columns into the scan, which
+    replaces the reference's manual ``.select("_id","related")`` pruning
+    (PageRank_Spark_v5.py:51-57).
     """
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return _read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -46,10 +98,8 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     - TIMESTAMP_NTZ -> cast to TIMESTAMP (wall clock reinterpreted in the
       session's UTC zone -- value-identical to the nanos floor above).
     """
-    from pyspark.sql import functions as F
-
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    df = _read_parquet(spark, os.path.join(sf_dir, "events.parquet"))
     ts_type = dict(df.dtypes)["ts"]
     if ts_type in ("bigint", "long"):
         return df.withColumn("ts", F.timestamp_micros(F.expr("CAST(ts DIV 1000 AS BIGINT)")))

@@ -76,14 +76,19 @@ def histogram(df: DataFrame, value_col: str, edges: list[tuple[float, str]], def
 
 
 def global_stats(df: DataFrame, value_col: str) -> DataFrame:
-    """A3: one-row global summary (count/avg/stddev/median/p90/max/sum)."""
+    """A3: one-row global summary (count/avg/stddev/median/p90/max/sum).
+
+    Both quantiles read one array-valued ``percentile``: Catalyst keeps a
+    single buffer for the repeated aggregate, where two scalar calls would
+    each buffer and shuffle every value of the column."""
     c = F.col(value_col)
+    q = F.percentile(c, [0.5, 0.9])
     return df.agg(
         F.count(c).alias("cnt"),
         dec_avg(value_col, "avg_val"),
         micro_round(F.stddev(c), "stddev_val", scale=4),
-        micro_round(F.percentile(c, 0.5), "p50_val", scale=4),
-        micro_round(F.percentile(c, 0.9), "p90_val", scale=4),
+        micro_round(q[0], "p50_val", scale=4),
+        micro_round(q[1], "p90_val", scale=4),
         micro_round(F.max(c), "max_val"),
         dec_sum(value_col, "sum_val"),
     )
@@ -105,15 +110,15 @@ def grouped_percentiles(
     path: ``percentile_approx`` (GK sketch) holds O(accuracy) state per
     group regardless of group size, with rank error <= 1/accuracy.  Same
     output shape either way; the a16 gate query machine-checks the approx
-    variant's rank-window guarantee against the exact form."""
+    variant's rank-window guarantee against the exact form.  Either way
+    all quantiles read one array-valued call, so each group keeps one
+    buffer (or sketch), not one per quantile."""
     c = F.col(value_col)
-    if approx:
-        pctl = lambda p: F.percentile_approx(c, p, F.lit(accuracy))  # noqa: E731
-    else:
-        pctl = lambda p: F.percentile(c, p)  # noqa: E731
+    ps = list(percentiles)
+    q = F.percentile_approx(c, ps, F.lit(accuracy)) if approx else F.percentile(c, ps)
     return df.groupBy(group_col).agg(
         F.count(c).alias("cnt"),
-        *[micro_round(pctl(p), f"p{int(p * 100)}", scale=4) for p in percentiles],
+        *[micro_round(q[i], f"p{int(p * 100)}", scale=4) for i, p in enumerate(ps)],
     )
 
 

@@ -69,6 +69,20 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=_ckpt_level())
 
 
+def _seed_frame(spark, seeds: list, id_type) -> DataFrame:
+    """Distinct ``seeds`` as a one-column ``id`` frame of ``id_type`` that
+    plans as a LocalRelation.
+
+    Seeds are deduplicated here in Python and bound as VALUES parameters,
+    so the frame is a LocalRelation in every session.  ``createDataFrame``
+    on a list plans as an RDD scan with Arrow off, where a ``distinct()``
+    and a checkpoint of it cost a Spark job each."""
+    uniq = list(dict.fromkeys(seeds))
+    rows = ", ".join("(?)" for _ in uniq) or "(NULL)"
+    df = spark.sql(f"SELECT CAST(id AS {id_type.simpleString()}) AS id FROM VALUES {rows} AS v(id)", args=uniq)
+    return df if uniq else df.where(F.lit(False))
+
+
 def densify(df: DataFrame, related_col: str, min_related: int = 5) -> DataFrame:
     """F1: keep only rows whose related-array has >= min_related entries --
     the reference's graph-densification filter applied BEFORE the expensive
@@ -323,6 +337,8 @@ def connected_components(edges: DataFrame, max_iter: int = 20, num_partitions: i
     runtime is O(component diameter) rounds -- small for dedup clusters.
     Returns (id, component) for every vertex WITH an edge; isolated
     vertices are their own component by definition (callers left-join).
+    Edges with a NULL endpoint are dropped, as connected_components_star
+    drops them.
     """
     if max_iter < 1:
         # changed starts at 0, so a zero-round loop would skip the
@@ -337,8 +353,11 @@ def connected_components(edges: DataFrame, max_iter: int = 20, num_partitions: i
     # distinct(sym); self-loops (u == v) stay as the single canonical row,
     # exactly as the old distinct kept them (they only assert the vertex
     # exists -- min-label over a self edge is the identity).
+    # NULL endpoints first: least/greatest skip NULLs, so (NULL, x) would
+    # otherwise canonicalize to an (x, x) self-loop and invent vertex x.
     canon = (
-        edges.select(
+        edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+        .select(
             F.least(F.col("src"), F.col("dst")).alias("src"),
             F.greatest(F.col("src"), F.col("dst")).alias("dst"),
         )
@@ -655,13 +674,8 @@ def k_hop_distances(edges: DataFrame, seeds: list, max_hops: int = 3) -> DataFra
     e = edges.repartition(n_part, "src").cache()
     # Seed type follows the edge id type (string graphs AND integer-encoded
     # ones -- the r11 g8/g14 narrow-id path -- share this operator).
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = edges.schema["src"].dataType
-    seed_df = spark.createDataFrame(
-        [(s,) for s in seeds], StructType([StructField("id", id_type)])
-    ).distinct()
-    visited = seed_df.select("id", F.lit(0).cast("long").alias("hops")).transform(_ckpt)
+    seed_df = _seed_frame(spark, seeds, edges.schema["src"].dataType)
+    visited = seed_df.select("id", F.lit(0).cast("long").alias("hops"))
     frontier = visited.select("id")
     for h in range(1, max_hops + 1):
         reached = (
@@ -705,14 +719,8 @@ def weighted_shortest_paths(edges: DataFrame, seeds: list, max_hops: int = 3) ->
     n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
     e = edges.repartition(n_part, "src").cache()
     # Seed type follows the edge id type (see k_hop_distances).
-    from pyspark.sql.types import StructField, StructType
-
-    id_type = edges.schema["src"].dataType
-    dist = (
-        spark.createDataFrame([(s,) for s in seeds], StructType([StructField("id", id_type)]))
-        .distinct()
-        .select("id", F.lit(0).cast("long").alias("dist"))
-        .transform(_ckpt)
+    dist = _seed_frame(spark, seeds, edges.schema["src"].dataType).select(
+        "id", F.lit(0).cast("long").alias("dist")
     )
     for _ in range(max_hops):
         relax = e.join(
