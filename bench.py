@@ -119,7 +119,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entrymod
 from youtubeanalyzerproject_big_data__spark.plans.inspect import stage_metrics
-from youtubeanalyzerproject_big_data__spark.session import get_spark
+from youtubeanalyzerproject_big_data__spark.session import default_cpus, get_spark
 
 # Headline set: the heavy/representative queries (joins, multi-agg, window,
 # graph/PageRank, dedup families, ANN, ALS) — not the trivial filters.
@@ -350,7 +350,7 @@ def main() -> None:
     from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_word_ngrams
 
     qs["a9_distinct_customers"](spark, sf_dir).collect()
-    spark.range(256).repartition(int(os.environ.get("SPARK_GRAFT_CPUS", "32"))).select(
+    spark.range(256).repartition(default_cpus()).select(
         make_word_ngrams(2)(F.lit("warm up workers")).alias("g")
     ).count()
 

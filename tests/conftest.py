@@ -5,7 +5,7 @@ import os
 import pytest
 from pyspark.sql import SparkSession
 
-from youtubeanalyzerproject_big_data__spark.session import SCRATCH_ROOT
+from youtubeanalyzerproject_big_data__spark.session import DAEMON_MODULE, SCRATCH_ROOT
 
 
 @pytest.fixture(scope="session")
@@ -20,6 +20,8 @@ def spark() -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.local.dir", spark_local)
+        # UDF tests run through the engine's worker daemon, as get_spark does.
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

@@ -348,6 +348,73 @@ def test_semantic_dedup_max_cell_skips_degenerate_cells(spark):
     assert kept == {0}  # without the cap the whole cluster collapses to id 0
 
 
+def test_semantic_dedup_matches_duckdb_oracle_on_edge_cells(spark):
+    """The per-cell kernel against d10's DuckDB oracle on a tiny corpus
+    with a zero vector (NaN cosines: never a hit), exact duplicates, a
+    one-member cell and a cell over ``max_cell``; then on an empty one."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+    from youtubeanalyzerproject_big_data__spark.operators.dedup import semantic_dedup_flags
+
+    dim, k, iters, threshold, max_cell = 3, 3, 2, 0.9, 5
+    big = [[10.0, 0.1 * i, 0.0] for i in range(7)] + [[10.0, 0.0, 0.0]]  # 8 members > cap
+    small = [[0.0, 0.5, 0.0], [0.0, 0.5, 0.0], [0.05, 0.5, 0.0], [0.0, 0.0, 0.0], [0.0, 0.1, 0.5]]
+    lone = [[0.0, 0.0, 50.0]]
+    vecs = big + small + lone
+    ids = [3 * i + 7 for i in range(len(vecs))]
+    zero_id = ids[len(big) + 3]
+    schema = "vec_id long, embedding array<double>"
+
+    def both(rows):
+        emb = spark.createDataFrame(rows, schema)
+        got = sorted(
+            tuple(r)
+            for r in semantic_dedup_flags(
+                emb, "vec_id", "embedding", dim=dim, k=k, iters=iters, threshold=threshold, max_cell=max_cell
+            ).collect()
+        )
+        con = duckdb.connect()
+        con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+        if rows:
+            con.executemany("INSERT INTO embeddings VALUES (?, ?)", rows)
+        sql = entrymod._semantic_dedup_oracle(dim=dim, k=k, iters=iters, threshold=threshold, max_cell=max_cell)
+        return got, sorted(con.execute(f"SELECT * FROM ({sql})").fetchall())
+
+    got, want = both(list(zip(ids, vecs)))
+    assert got == want
+    sizes = {}
+    for _, cell, _ in got:
+        sizes[cell] = sizes.get(cell, 0) + 1
+    assert 1 in sizes.values() and max(sizes.values()) > max_cell  # lone cell and over-cap cell
+    kept = {i: kp for i, _, kp in got}
+    assert kept[zero_id] == 1 and kept[ids[len(big)]] == 1 and kept[ids[len(big) + 1]] == 0  # NaN, dup pair
+    assert both([(1, [1.0, 0.0, 0.0])])[0] == [(1, 0, 1)]
+    assert both([]) == ([], [])  # no vectors: no seeds, no cells, no rows
+
+
+def test_cell_dedup_kernel_row_blocks_change_nothing(monkeypatch):
+    """The per-cell kernel scores its cosine matrix in row blocks; any
+    block size gives the one-block flags, ids compared by value."""
+    import numpy as np
+    import pandas as pd
+
+    from youtubeanalyzerproject_big_data__spark.functions import _arrow_udfs
+
+    rng = np.random.default_rng(5)
+    m = rng.normal(size=(23, 6))
+    m[4] = m[9]  # exact duplicate
+    m[7] = 0.0  # zero vector
+    m[11] = 3.0 * m[2]  # same direction
+    pdf = pd.DataFrame({"id": rng.permutation(100)[:23], "v": list(m), "cell": np.int32(0)})
+    kernel = _arrow_udfs.make_cell_dedup(0.5, None)
+    whole = kernel(pdf)
+    assert 0 < whole["kept"].sum() < len(pdf)
+    for rows_per_block in (1, 5, 23):
+        monkeypatch.setattr(_arrow_udfs, "_CELL_BLOCK", rows_per_block * len(pdf))
+        assert kernel(pdf).equals(whole)
+
+
 def test_segment_dedup_removes_all_copies_and_reconstructs(spark):
     import hashlib
 

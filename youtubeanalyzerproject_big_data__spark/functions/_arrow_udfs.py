@@ -107,6 +107,44 @@ def make_cosine_seq():
     return _cos
 
 
+# Score-matrix rows per block in make_cell_dedup: block rows x cell size
+# stays near this many doubles (8 MB), whatever the cell size.
+_CELL_BLOCK = 1 << 20
+
+
+def make_cell_dedup(threshold: float, max_cell: int | None):
+    """applyInPandas kernel of dedup.semantic_dedup_flags: one k-means cell
+    (id, v, cell) in, (id, cell, kept) out for every member.
+
+    A member is dropped iff a member of SMALLER ID (compared on id values,
+    not positions) scores cosine >= ``threshold`` against it.  Each cosine
+    is bit-identical to make_cosine_seq on that pair: the dot matrix
+    accumulates one dim at a time with elementwise numpy (never ``m @ m.T``
+    -- BLAS reorders and fuses the sum), and the norms are the same fold of
+    each vector with itself.  A zero vector scores NaN, which is never a
+    hit.  A cell over ``max_cell`` members keeps all of them."""
+
+    def _kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        ids = pdf["id"].to_numpy()
+        n = len(ids)
+        dropped = np.zeros(n, dtype=bool)
+        if n > 1 and (max_cell is None or n <= max_cell):
+            m = _as_matrix(pdf["v"])
+            norms = np.sqrt(_seq_dot(m, m))
+            step = max(1, _CELL_BLOCK // n)
+            for r0 in range(0, n, step):
+                rows = m[r0 : r0 + step]
+                dots = np.zeros((len(rows), n))
+                for i in range(m.shape[1]):
+                    dots = dots + np.multiply.outer(rows[:, i], m[:, i])
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    hit = dots / np.multiply.outer(norms[r0 : r0 + step], norms) >= threshold
+                dropped |= (hit & (ids[r0 : r0 + step, None] < ids[None, :])).any(axis=0)
+        return pd.DataFrame({"id": ids, "cell": pdf["cell"].to_numpy(), "kept": (~dropped).astype(np.int64)})
+
+    return _kernel
+
+
 def make_hyperplane_sig(planes):
     """LSH signature: bit p = (v . plane_p) >= 0 over literal hyperplanes
     (num_planes x dim, captured in the closure).  Dots are exact-sequential;

@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from youtubeanalyzerproject_big_data__spark.schema import TESTDATA_TABLES
-
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Session confs that change what parquet schema inference returns.
@@ -106,16 +104,6 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     if ts_type == "timestamp_ntz":
         return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in (names or list(TESTDATA_TABLES))}
-
-
-def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every table as a SQL temp view so ``spark.sql`` works verbatim."""
-    for name, df in load_tables(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
 
 
 def write_json_artifact(df: DataFrame, path: str) -> None:

@@ -5,15 +5,14 @@ the Phase-1 "precompute" jobs that materialize JSON caches for the GUI):
 
   * network/category/size/view statistics  (run_netagg_job.py)
   * PageRank top-N with uploader enrichment (run_pagerank_job.py)
-  * ALS recommendations                     (run_alsrecs_job.py)
   * the JSON artifact ("materialized view") layer (S9)
 
 Every job is a thin composition of the generic operators in ``operators/``
 bound to the reference's constants -- bucket edges 240/1200 s and
 1k/10k/100k/1M views (YoutubeNetworkAgg_Final.py:189-194,227-234), PageRank
 resetProb 0.15 / maxIter 10 / >=5-related densification
-(PageRank_Spark_v5.py:61,102), ALS 10% sample seed 42 / maxIter 10 /
-regParam 0.1 / 500 users x 5 recs (run_alsrecs_job.py:55,84-104).
+(PageRank_Spark_v5.py:61,102).  The ALS recommendation job
+(run_alsrecs_job.py) is driver query m1 (q_als) over operators/recommend.
 
 Reference quirks preserved deliberately (SURVEY.md par.7.4):
   * HTML-entity category duplicates are NOT normalized (parity first).
@@ -33,7 +32,7 @@ from pyspark.sql import functions as F
 
 from youtubeanalyzerproject_big_data__spark.io import write_json_artifact
 from youtubeanalyzerproject_big_data__spark.operators import aggregates as agg
-from youtubeanalyzerproject_big_data__spark.operators import graph, joins, recommend
+from youtubeanalyzerproject_big_data__spark.operators import graph, joins
 
 # Reference bucket constants (YoutubeNetworkAgg_Final.py:189-194, 227-234).
 LENGTH_BUCKETS: list[tuple[float, str]] = [(240, "1_short_lt240s"), (1200, "2_medium_240to1199s")]
@@ -112,18 +111,6 @@ def pagerank_job(videos: DataFrame, top_n: int = 500, min_related: int = 5) -> D
         .withColumn("rank", F.row_number().over(Window.orderBy(F.desc("pagerank"), F.asc("id"))))
         .select("rank", F.col("id").alias("video_id"), F.col("pagerank").alias("influence_score"), "uploader")
     )
-
-
-def als_recs_job(videos: DataFrame, n_users: int = 500, n_recs: int = 5) -> DataFrame:
-    """run_alsrecs_job.py end-to-end: the uploader 'rates' their own videos
-    with the video's average rate (SURVEY.md par.1.4 semantic quirk,
-    preserved); 10% Bernoulli sample seed 42; 500 users x 5 recs."""
-    base = videos.select(
-        F.col("uploader").alias("user"), F.col("video_id").alias("item"), F.col("rate").alias("rating")
-    )
-    ratings = recommend.build_ratings(base, "user", "item", "rating", sample_fraction=0.10)
-    model = recommend.train_als(ratings, max_iter=10, reg_param=0.1, rank=10, seed=42)
-    return recommend.recommend_for_users(model, ratings, n_users=n_users, n_recs=n_recs)
 
 
 def run_netagg(videos: DataFrame, out_dir: str) -> None:

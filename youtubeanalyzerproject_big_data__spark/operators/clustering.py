@@ -130,7 +130,9 @@ def _lloyd_final_cents(
         new = {}
         for r in rows:
             new.setdefault(r["cell"], [0.0] * dim)[r["pos"]] = float(r["s"]) / (r["n"] * _SCALE)
-        cents = [new.get(j, cents[j]) for j in range(k)]  # empty cell keeps previous centroid
+        # An empty cell keeps its previous centroid; a corpus of fewer than
+        # k vectors has fewer than k cells.
+        cents = [new.get(j, c) for j, c in enumerate(cents)]
     return base, cents
 
 

@@ -537,18 +537,6 @@ def ngram_jaccard_pairs(
     return result
 
 
-def minhash_signatures(df: DataFrame, id_col: str, text_col: str, n: int = 3, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, minhash array<long>[num_hashes]) from word-n-gram shingles.
-
-    minhash_j(doc) = min over shingles of lane (j%4) of md5(seed=j//4 digest)
-    -- one 128-bit digest feeds four 32-bit hash lanes, so K minhashes cost
-    ceil(K/4) md5 evaluations per shingle (md5_int32_lanes).  Computed as one
-    explode + single groupBy with num_hashes min() aggregates (one shuffle
-    keyed by doc_id, map-side combined).
-    """
-    return _minhash_sigs_from_shingles(_shingles(df, id_col, text_col, n), num_hashes)
-
-
 def _minhash_sigs_from_shingles(sh: DataFrame, num_hashes: int) -> DataFrame:
     cols = []
     for s in range((num_hashes + 3) // 4):
@@ -950,44 +938,29 @@ def semantic_dedup_flags(
     n/k stays bounded and total flops are O(n * cell_size), not O(n^2)).
 
     Cells are EXACTLY km1's (clustering.kmeans_assign_final shares seed
-    selection and the full Lloyd trajectory, bit-for-bit).  Within a cell,
-    candidate pairs come from one self-join keyed on the cell id (narrow
-    int key; AQE splits a skewed cell's join), scored with the exact-
-    sequential cosine kernel, and a doc is DROPPED iff some smaller-id doc
-    in its cell is cosine->= ``threshold`` (deterministic representative:
-    smallest id wins, the d1/c1 convention).  ``max_cell`` caps degenerate
-    cells like the LSH ``max_bucket``: an over-cap cell skips pair
-    generation entirely (all its docs kept) rather than running an
-    unbounded quadratic task -- mirrored in the oracle.
+    selection and the full Lloyd trajectory, bit-for-bit).  Each cell is
+    then one group of ``groupBy(cell).applyInPandas`` with a per-cell
+    kernel (_arrow_udfs.make_cell_dedup): it builds the cell's cosine
+    matrix in numpy with the exact-sequential fold (each entry bit-equal
+    to make_cosine_seq on the pair) and DROPS a doc iff some smaller-id
+    doc in its cell is cosine->= ``threshold`` (deterministic
+    representative: smallest id wins, the d1/c1 convention).  So vectors
+    cross to Python once each -- traffic is linear in n, not sum(n_cell^2)
+    pair rows -- and the quadratic work is numpy's, SemDeDup's own
+    per-cluster similarity-matrix form.  ``max_cell`` caps degenerate
+    cells like the LSH ``max_bucket``: an over-cap cell is not scored
+    (all its docs kept) rather than running an unbounded quadratic
+    task -- mirrored in the oracle.
 
     Returns (id, cell, kept) for EVERY input vector (kept in {0,1}).
     """
-    from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_cosine_seq
+    from youtubeanalyzerproject_big_data__spark.functions._arrow_udfs import make_cell_dedup
     from youtubeanalyzerproject_big_data__spark.operators.clustering import kmeans_assign_final
 
     assigned = kmeans_assign_final(emb, id_col, vec_col, dim, k=k, iters=iters, hash_seed=hash_seed)
-    # Pin the assignment once: the self-join reads it twice and the final
-    # left join a third time; recomputing would re-run the Lloyd trajectory.
-    assigned = assigned.localCheckpoint(eager=True)
-    members = assigned.select("cell", "id", "v")
-    if max_cell is not None:
-        sizes = assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("_n"))
-        members = members.join(F.broadcast(sizes.where(F.col("_n") <= max_cell).select("cell")), "cell")
-    pairs = (
-        members.alias("a")
-        .join(members.alias("b"), (F.col("a.cell") == F.col("b.cell")) & (F.col("a.id") < F.col("b.id")))
-        .select(F.col("a.v").alias("v1"), F.col("b.v").alias("v2"), F.col("b.id").alias("id2"))
-    )
-    dropped = (
-        pairs.withColumn("cos_sim", make_cosine_seq()(F.col("v1"), F.col("v2")))
-        .where(F.col("cos_sim") >= threshold)
-        .select(F.col("id2").alias("id"))
-        .distinct()
-    )
-    return assigned.join(dropped.withColumn("_drop", F.lit(1)), "id", "left").select(
-        "id",
-        "cell",
-        F.when(F.col("_drop").isNull(), F.lit(1)).otherwise(F.lit(0)).cast("long").alias("kept"),
+    id_type = assigned.schema["id"].dataType.simpleString()
+    return assigned.groupBy("cell").applyInPandas(
+        make_cell_dedup(threshold, max_cell), f"id {id_type}, cell int, kept long"
     )
 
 

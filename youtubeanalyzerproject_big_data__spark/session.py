@@ -14,7 +14,19 @@ import tempfile
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def default_cpus() -> int:
+    """SPARK_GRAFT_CPUS, else the cores this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
+
+
+DEFAULT_SHUFFLE_PARTITIONS = default_cpus()
+
+# Python worker daemon (see daemon.py): skips the per-task re-read of every
+# zipimporter's archive directory.  A daemon conf, not
+# spark.python.worker.module: pyspark.daemon loads a custom worker module
+# only when its name starts with "pyspark".
+DAEMON_MODULE = "youtubeanalyzerproject_big_data__spark.daemon"
 
 # All engine scratch (Spark local dirs for shuffle/blockmgr spill, streaming
 # source/sink/checkpoint dirs, layout-query write-read dirs) lives under the
@@ -73,7 +85,6 @@ def get_spark(
     Applied via spark.conf.set so it takes effect even when an existing
     session is reused (builder confs don't reach a live session).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     state_store = state_store or os.environ.get("SPARK_GRAFT_STATE_STORE")
     if state_store is not None and state_store not in STATE_STORE_PROVIDERS:
         raise ValueError(f"unknown state_store {state_store!r}; pick from {sorted(STATE_STORE_PROVIDERS)}")
@@ -83,8 +94,9 @@ def get_spark(
     os.makedirs(spark_local, exist_ok=True)
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{default_cpus()}]")
         .config("spark.local.dir", spark_local)
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         # AQE: runtime coalescing of shuffle partitions, skew-join splitting,
         # sort-merge -> broadcast conversion when a side turns out small.
         .config("spark.sql.adaptive.enabled", "true")
