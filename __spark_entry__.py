@@ -8125,8 +8125,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         # Components via recursive transitive closure (pair graphs from
         # dedup are tiny relative to the corpus, so closure is affordable
-        # oracle-side; the engine itself uses iterative min-label
-        # propagation, graph.connected_components).
+        # oracle-side; the engine itself uses
+        # graph.connected_components_star).
         "d7_dup_clusters": f"""
             WITH RECURSIVE {_shingles_cte(dedup.DEFAULT_MAX_DF)},
             p AS (SELECT doc1, doc2 FROM jac WHERE jaccard >= 0.8),

@@ -23,88 +23,7 @@ so per-query minima/maxima/samples plus a ``contended`` list (median/min >
 BENCH_DETAIL.json.  A warmup query first absorbs JVM/session startup so
 the numbers reflect engine throughput, not cold-start.
 
-Known deliberate costs (do NOT chase as regressions):
-- s1_ann_bruteforce_top5 carries ~0.3 s of local-scale overhead vs round 2
-  from the two-stage partial top-k (map-side per-partition top-k before the
-  final rank) -- that stage is what keeps the plan reducer-safe at 1e9 rows.
-- Common-subset totals within +/-20% of the prior round are box noise
-  (CLAUDE.md "Benchmarking"), not engine drift.
-- tpch_q1 carries ~0.2-0.3 s from r6's integer-exact dec_avg (pmod +
-  exact-multiple division replacing the broken double ROUND on its three
-  averages) -- the price of the e1 half-case fix, applied engine-wide.
-- g6 carries ~1-1.5 s at sf0.1 from the r10 pair-build rewrite (lineitem
-  self-join -> one groupBy + in-array expansion): at local scale AQE ran
-  the old join as a 33 MB broadcast of the fact table, which is exactly
-  the plan that cannot exist at 100x (forced SMJ, two fact-table
-  shuffles, order groups re-materialized as join products) -- the
-  collect_set build is the scale shape; g9/g10 share it and got FASTER
-  locally because their downstream work dominates.
-- g13 may show +0.5-1 s vs r10-baseline runs at sf0.1 (within the noise
-  band; its shuffle write HALVED 45 -> 21.6 MB from the canonicalize-
-  first preamble): per-round reads now scan the checkpointed canonical
-  half-table twice via a lazy union instead of a second materialized
-  full-width copy -- same bytes read, one materialization pass and half
-  the distinct exchange saved, which is what matters off-box.
-- The 30 "regressions" in PERF_r10 ADJUDICATED (r11, same-boot full bench
-  at the r10-verdict HEAD, per-query shuffle bytes vs the r10 record):
-  tpch_q1 (0 B both, 4.88 -> 2.71 s), a26 (2.2 MB =, 2.83 -> 2.15),
-  q3 (0.4 MB =, 2.69 -> 2.15), s6 (0.7 MB =, 2.62 -> 2.39), q5 (0.5 MB =,
-  2.88 -> 2.16), a7 (5.2 MB =, 2.21 -> 1.77), l6 (0 B, 2.69 -> 2.50),
-  u8 (0 B, 1.75 -> 1.75) -- ALL NOISE from the documented r10 mid-round
-  sandbox reboot: identical bytes, walls back at r9 levels on one boot.
-  The two non-noise movers are d3/d15 (next entry: root-caused, kept).
-- d3/d15 carry ~+2 s at sf0.1 vs the r9 record (isolated 6-sample steady
-  state 4.4-5.9 s vs r9's 2.1-2.5 s band; adjudicated r11 on one boot):
-  the exact-dup-collapse layers (cid digest groupBy, multiplicity attach,
-  member expansion) add ~8 fixed-overhead stages that dominate at 5k
-  distinct contents.  Shuffle bytes moved 7.0 -> 10.0 MB, all in those
-  narrow layers.  DELIBERATE: the collapse replaced the ~1 TB
-  doc-granularity verification shuffle that killed the sf30 replay twice
-  (300x clone density) -- the layers' cost is fixed while their savings
-  scale with clone fan-out, which is the web-corpus norm.  Phase profile
-  in OPTIMIZATION_r11.md; do not chase.
-- d2/d12 carry ~0.5-1 s at sf0.1 from the r8 `hint("shuffle_hash")` pin on
-  the doc-stat side of the pair-verification joins: Catalyst's static size
-  estimate for the post-explode aggregate is unreliable and at sf10 it chose
-  to BROADCAST a ~1e9-row pair table (driver maxResultSize abort).  The pin
-  trades a small local-scale cost for not aborting at 100x -- keep it.
-- The r8 clean record's `contended` flags (d2, g10, g8, s4, s8, tpch_q12)
-  were recorded on an IDLE box: each shows a monotone warm-up ramp or one
-  cold first sample (e.g. s4 [12.9, 2.1, 1.3]), i.e. per-run JIT/page-cache
-  variance tripping the median/min heuristic, not a neighbor process.
-- t15/g6/a7 r6 drifts ADJUDICATED (r7, VERDICT r6 item 3), isolated 6-sample
-  runs after the standard warmup on an idle box:
-  - a7_order_parts_csv: NOISE.  Isolated min 1.209 s == r5's 1.159 s; the
-    1.48 s r6 median was session-neighbor contention.
-  - g6_triangle_census: ROOT-CAUSED, deliberate.  Isolated steady state
-    5.5-6.0 s vs r5's 4.18 s; the r6 auto-broadcast gate's e.count() is an
-    extra SERIAL action that materializes the distinct+cache before the
-    joins (the same work r5 fused lazily into the first join).  That count
-    is what keeps a 100x graph from aborting on the broadcast limit, its
-    output pre-populates the cache the algorithm needs anyway, and its
-    relative cost vanishes as the joins grow -- keep it.
-  - t15_pmi_collocations: ENVIRONMENT, not code.  No t15-path commit since
-    r5 (deps diffed: only session retainedStages=20000 changed, and a
-    direct A/B probe shows it costs nothing -- 2.24 s at 1000 vs 1.99 s at
-    20000); shuffle bytes identical to the committed record (2421930).
-    Today's isolated steady state 1.7-2.0 s vs r5's 1.20 s is the box band.
-- d3_minhash_lsh_pairs r5 drift ADJUDICATED (r6, VERDICT r5 item 3):
-  isolated re-runs at sf0.1 after the standard warmup gave
-  [7.44 cold, 2.95, 2.54, 2.35, 2.11, 2.29] -- steady state 2.1-2.5 s,
-  matching r4's 2.38 s.  The 2.94 s r5 median was session-neighbor noise
-  (13 new bench queries landed around it that round); no minhash-path
-  commit existed and none was needed.  The first post-warmup sample
-  carries ~0.5 s of codegen/broadcast warm-up, so single-sample d3
-  numbers overstate it.
-- s8_hybrid_rrf r8 drift (1.04 -> 1.47 s vs r6) ADJUDICATED (r9, VERDICT
-  r8 item 6): isolated 6-sample run at sf0.1 gave [6.73 cold, 1.95, 1.70,
-  1.47, 1.43, 1.35] with per-run shuffle write EXACTLY 324129 bytes --
-  bit-identical to the r6 AND r8 committed records, so the plan and work
-  are unchanged (no s8-path commit exists either).  NOISE: s8 is a
-  sub-second, fixed-overhead-dominated query (driver planning + 32-task
-  scheduling + two broadcasts) whose steady state depends on how warmed
-  the session is; r6's 0.93 min came 100+ queries into a bench session.
-  Historical records with the same 324129 bytes span 0.93-3.0 s.
+Known deliberate costs and adjudicated drifts: BENCH_NOTES.md.
 """
 
 from __future__ import annotations

@@ -77,43 +77,34 @@ def test_densify_min_related_filter(videos):
     assert graph.densify(videos, "related", 0).count() == sum(1 for v in all_ids if sizes[v] is not None)
 
 
+def _star_both_paths(edges) -> tuple[dict, dict]:
+    """(fast-path, distributed-path) labels of connected_components_star."""
+    fast = {r["id"]: r["component"] for r in graph.connected_components_star(edges).collect()}
+    dist = {
+        r["id"]: r["component"]
+        for r in graph.connected_components_star(edges, small_graph_threshold=0).collect()
+    }
+    return fast, dist
+
+
 def test_connected_components_chain_and_clusters(spark):
-    """Min-label propagation: chains converge to the smallest member."""
+    """Chain, pair and star components converge to their smallest member,
+    on the driver union-find fast path and on the distributed star rounds."""
     edges = spark.createDataFrame(
         # component {1,2,3,4} as a chain; component {10,11}; {20,21,22} star
         [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20)],
         "src long, dst long",
     )
-    out = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
-    assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
-
-
-def test_connected_components_rejects_zero_iterations(spark):
-    """max_iter < 1 must raise up front: a zero-round loop would silently
-    return every-vertex-labels-itself, bypassing the convergence guard."""
-    import pytest
-
-    edges = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="max_iter"):
-        graph.connected_components(edges, max_iter=0)
-
-
-def test_connected_components_self_loop_vertex_kept(spark):
-    """A vertex whose only edge is a self-loop must still appear, labeled
-    itself -- guards the r11 canonicalize-first symmetrization (a self-loop
-    must enter the symmetric table exactly once, not twice or zero times)."""
-    edges = spark.createDataFrame([(5, 5), (1, 2)], "src long, dst long")
-    out = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
-    assert out == {5: 5, 1: 1, 2: 1}
+    fast, dist = _star_both_paths(edges)
+    assert fast == dist == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
 def test_connected_components_drops_null_endpoint_edges(spark):
-    """An edge with a NULL endpoint asserts nothing: least/greatest skip
-    NULLs, so without the filter (NULL, 7) became a (7, 7) self-loop and
-    invented vertex 7."""
+    """An edge with a NULL endpoint asserts nothing: it must neither invent
+    a vertex nor join two components, on either path."""
     edges = spark.createDataFrame([(None, 7), (8, None), (None, None), (1, 2)], "src long, dst long")
-    out = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
-    assert out == {1: 1, 2: 1}
+    fast, dist = _star_both_paths(edges)
+    assert fast == dist == {1: 1, 2: 1}
 
 
 def test_label_propagation_zero_iterations_identity(spark):
@@ -124,17 +115,43 @@ def test_label_propagation_zero_iterations_identity(spark):
     assert out == {"a": "a", "b": "b"}
 
 
+def _min_label_reference(pairs) -> dict:
+    """Min-label propagation in plain Python: every vertex repeatedly takes
+    the smallest label among itself and its neighbours until nothing moves.
+    Self-loops and NULL endpoints are skipped, as connected_components_star
+    drops them."""
+    nbrs: dict = {}
+    for a, b in pairs:
+        if a is None or b is None or a == b:
+            continue
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    label = {v: v for v in nbrs}
+    changed = True
+    while changed:
+        changed = False
+        for v, ns in nbrs.items():
+            best = min([label[v]] + [label[n] for n in ns])
+            if best < label[v]:
+                label[v] = best
+                changed = True
+    return label
+
+
 def test_star_components_match_min_label(spark):
-    """large-star/small-star and min-label propagation agree on mixed
-    component shapes (chain, pair, star).  Self-loops are excluded: the
-    star variant drops them (callers pre-filter; edges_from_pairs does)."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20)],
-        "src long, dst long",
-    )
-    star = {r["id"]: r["component"] for r in graph.connected_components_star(edges).collect()}
-    prop = {r["id"]: r["component"] for r in graph.connected_components(edges).collect()}
-    assert star == prop == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
+    """large-star/small-star agrees with min-label propagation on mixed
+    component shapes (chain, pair, star) and on a random graph, on both the
+    fast path and the distributed rounds."""
+    import random
+
+    mixed = [(1, 2), (2, 3), (3, 4), (10, 11), (21, 20), (22, 20)]
+    rng = random.Random(11)
+    rand = [(rng.randrange(120), rng.randrange(120)) for _ in range(90)]
+    for pairs in (mixed, rand):
+        edges = spark.createDataFrame(pairs, "src long, dst long")
+        fast, dist = _star_both_paths(edges)
+        assert fast == dist == _min_label_reference(pairs)
+    assert _min_label_reference(mixed) == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20, 22: 20}
 
 
 def test_star_components_chain_rounds_logarithmic(spark):
@@ -162,11 +179,7 @@ def test_star_components_fast_path_equals_distributed(spark):
     edges = spark.createDataFrame(
         [(rng.randrange(200), rng.randrange(200)) for _ in range(150)], "src long, dst long"
     )
-    fast = {r["id"]: r["component"] for r in graph.connected_components_star(edges).collect()}
-    dist = {
-        r["id"]: r["component"]
-        for r in graph.connected_components_star(edges, small_graph_threshold=0).collect()
-    }
+    fast, dist = _star_both_paths(edges)
     assert fast == dist and len(fast) > 0
 
 
@@ -225,6 +238,16 @@ def test_personalized_pagerank_sink_seed(spark):
     out = {r["id"]: r["pagerank"] for r in personalized_pagerank(df, ["S"], 0.15, max_iter=3).collect()}
     assert out["S"] == 0.15
     assert out["B"] > 0
+
+
+def test_personalized_pagerank_duplicate_seed_listed_once(spark):
+    """A seed listed twice is one seed: an unreachable seed appears once,
+    at exactly reset_prob, not once per listing."""
+    from youtubeanalyzerproject_big_data__spark.operators.graph import personalized_pagerank
+
+    df = spark.createDataFrame([("A", "B"), ("B", "C"), ("C", "A")], "src string, dst string")
+    out = [(r["id"], r["pagerank"]) for r in personalized_pagerank(df, ["S", "S"], 0.15, max_iter=3).collect()]
+    assert out == [("S", 0.15)]
 
 
 def test_k_hop_distances_exact_min_hops(spark):

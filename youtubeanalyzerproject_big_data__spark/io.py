@@ -19,8 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Session confs that change what parquet schema inference returns.
 _SCHEMA_CONFS = (
     "spark.sql.legacy.parquet.nanosAsLong",

@@ -41,32 +41,21 @@ edge-table cache is scan-shaped state whose DISK spill competes with the
 shuffle's disk at scale; evicted partitions recompute (CPU) instead."""
 
 
-def _ckpt_level():
-    """Storage level for iterative-loop checkpoints, from
-    ``SPARK_GRAFT_CKPT_LEVEL`` (e.g. ``DISK_ONLY``, ``MEMORY_AND_DISK``).
+_CHECKPOINT_EVERY = 5
+"""pagerank / personalized_pagerank truncate rank-table lineage every this
+many iterations."""
 
-    Default (unset) keeps Spark's localCheckpoint default: deserialized
-    MEMORY_AND_DISK.  That is the right call while the loop state fits in
-    the storage pool, but a corpus-sized edge table cached as deserialized
-    row objects costs ~50-70 bytes/row of heap PER ROUND (superseded
-    rounds linger until session end) -- at the sf30 replay g13's ~750M-row
-    undirected edge set OOM'd an 80 g heap through three tuning attempts.
-    ``DISK_ONLY`` (with ``spark.rdd.compress=true``) streams the blocks
-    out serialized instead, which is the 1000-executor answer too: an
-    iterative edge table is scan-shaped state, not working-set."""
-    import os
-
-    from pyspark import StorageLevel
-
-    name = os.environ.get("SPARK_GRAFT_CKPT_LEVEL")
-    return getattr(StorageLevel, name) if name else None
+_CONTRIB_SCALE = 1e9
+"""Integer quantum of the PageRank-family contribution sums: each edge
+contribution is round(rank * weight * _CONTRIB_SCALE) as a long.  The DuckDB
+oracles (_pagerank_oracle, _ppr_oracle) replay the same quantum."""
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
     """localCheckpoint(eager) unless the plan-test hook disabled it."""
     if _DISABLE_CHECKPOINTS:
         return df
-    return df.localCheckpoint(eager=True, storageLevel=_ckpt_level())
+    return df.localCheckpoint(eager=True)
 
 
 def _seed_frame(spark, seeds: list, id_type) -> DataFrame:
@@ -130,7 +119,7 @@ def degree_distribution(edges: DataFrame, direction: str = "out") -> DataFrame:
     return deg.groupBy("degree").agg(F.count(F.lit(1)).alias("num_vertices")).orderBy("degree")
 
 
-def prepare_weighted_edges(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
+def prepare_weighted_edges(edges: DataFrame) -> DataFrame:
     """Build the PageRank-family weighted edge table: repartition by src,
     then a partition-local window count gives each edge weight
     1/out_deg(src) in ONE scan + ONE shuffle (a groupBy+join formulation
@@ -147,8 +136,7 @@ def prepare_weighted_edges(edges: DataFrame, num_partitions: int | None = None) 
     the cache lifecycle (those functions never unpersist a provided
     handle), so release it with ``handle.unpersist()`` when done.
     """
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     return (
         edges.repartition(n_part, "src")
         .select("src", "dst", (F.lit(1.0) / F.count(F.lit(1)).over(Window.partitionBy("src"))).alias("weight"))
@@ -160,9 +148,6 @@ def pagerank(
     edges: DataFrame | None,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 5,
-    num_partitions: int | None = None,
-    contrib_scale: float = 1e9,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
     """G4: iterative DataFrame PageRank, reference params resetProb=0.15
@@ -181,7 +166,7 @@ def pagerank(
     one join + one aggregation per iteration, nothing else.
 
     Determinism: each edge contribution is quantized to an INTEGER number of
-    1/contrib_scale units (round(rank*weight*scale) as long) and the
+    1/_CONTRIB_SCALE units (round(rank*weight*scale) as long) and the
     per-vertex sum runs over longs, which is exact and order-independent --
     the result is bit-identical across partition counts, executor counts,
     AQE decisions, and engines (the DuckDB oracle replays the same integer
@@ -198,9 +183,9 @@ def pagerank(
         # Lazy cache: populated by the first iteration's job and reused by
         # every later one -- an eager count() here is a whole extra pass
         # over the edges (measured ~25% of total runtime at bench scale).
-        weighted = prepare_weighted_edges(edges, num_partitions)
+        weighted = prepare_weighted_edges(edges)
 
-    scale = F.lit(contrib_scale)
+    scale = F.lit(_CONTRIB_SCALE)
     damp = 1.0 - reset_prob
     ranks = None  # None => every vertex still at the initial rank of 1.0
     absent_rank = 1.0  # rank of any src missing from `ranks` (no in-edges)
@@ -222,7 +207,7 @@ def pagerank(
             (F.lit(reset_prob) + F.lit(damp) * (F.col("ci") / scale)).alias("rank"),
         )
         absent_rank = reset_prob
-        if (i + 1) % checkpoint_every == 0 and i + 1 < max_iter:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < max_iter:
             ranks = ranks.transform(_ckpt)  # truncate lineage
 
     if ranks is None:  # max_iter == 0: everything at the initial rank
@@ -254,9 +239,6 @@ def personalized_pagerank(
     sources: list,
     reset_prob: float = 0.15,
     max_iter: int = 10,
-    checkpoint_every: int = 5,
-    num_partitions: int | None = None,
-    contrib_scale: float = 1e9,
     weighted: DataFrame | None = None,
 ) -> DataFrame:
     """Personalized PageRank: the reset mass returns only to ``sources``
@@ -280,9 +262,9 @@ def personalized_pagerank(
         raise ValueError(f"max_iter must be >= 1, got {max_iter}")
     owns_weighted = weighted is None
     if owns_weighted:
-        weighted = prepare_weighted_edges(edges, num_partitions)
+        weighted = prepare_weighted_edges(edges)
     spark = weighted.sparkSession
-    scale = F.lit(contrib_scale)
+    scale = F.lit(_CONTRIB_SCALE)
     damp = 1.0 - reset_prob
     in_s = lambda c: F.col(c).isin(list(sources))  # noqa: E731
     reset_of_dst = F.when(in_s("dst"), F.lit(reset_prob)).otherwise(F.lit(0.0))
@@ -305,15 +287,11 @@ def personalized_pagerank(
             F.col("dst").alias("id"),
             (reset_of_dst + F.lit(damp) * (F.col("ci") / scale)).alias("rank"),
         )
-        if (i + 1) % checkpoint_every == 0 and i + 1 < max_iter:
+        if (i + 1) % _CHECKPOINT_EVERY == 0 and i + 1 < max_iter:
             ranks = ranks.transform(_ckpt)
     # seeds with no in-edges never appear as a dst; they still hold reset.
     # Seed type follows the edge id type (see k_hop_distances).
-    from pyspark.sql.types import StructField, StructType
-
-    seed_df = spark.createDataFrame(
-        [(s,) for s in sources], StructType([StructField("id", weighted.schema["src"].dataType)])
-    )
+    seed_df = _seed_frame(spark, sources, weighted.schema["src"].dataType)
     seed_only = seed_df.join(ranks.select("id"), "id", "left_anti").select("id", F.lit(reset_prob).alias("rank"))
     result = (
         ranks.where(F.col("rank") > 0.0)
@@ -324,86 +302,6 @@ def personalized_pagerank(
     if owns_weighted:
         weighted.unpersist()
     return result
-
-
-def connected_components(edges: DataFrame, max_iter: int = 20, num_partitions: int | None = None) -> DataFrame:
-    """Connected components by min-label propagation: every vertex converges
-    to the smallest vertex id reachable from it (undirected).
-
-    The dedup pipeline's clustering step: near-dup PAIRS (d2/d3/d4 output)
-    become duplicate GROUPS.  Each round is one join + one aggregation over
-    the symmetrized edge table (cached, hash-partitioned once, like
-    pagerank); the loop stops early when a round changes no label, so
-    runtime is O(component diameter) rounds -- small for dedup clusters.
-    Returns (id, component) for every vertex WITH an edge; isolated
-    vertices are their own component by definition (callers left-join).
-    Edges with a NULL endpoint are dropped, as connected_components_star
-    drops them.
-    """
-    if max_iter < 1:
-        # changed starts at 0, so a zero-round loop would skip the
-        # non-convergence guard and return every-vertex-labels-itself.
-        raise ValueError(f"max_iter must be >= 1, got {max_iter}")
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
-    # Canonicalize FIRST, symmetrize by union (the kcore r10 collapse):
-    # distinct runs over m canonical rows instead of 2m symmetrized ones --
-    # half the dedup exchange.  The two directions of a canonical-distinct
-    # set are disjoint (u < v vs v > u), so canon + canon.swap IS the old
-    # distinct(sym); self-loops (u == v) stay as the single canonical row,
-    # exactly as the old distinct kept them (they only assert the vertex
-    # exists -- min-label over a self edge is the identity).
-    # NULL endpoints first: least/greatest skip NULLs, so (NULL, x) would
-    # otherwise canonicalize to an (x, x) self-loop and invent vertex x.
-    canon = (
-        edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-        .select(
-            F.least(F.col("src"), F.col("dst")).alias("src"),
-            F.greatest(F.col("src"), F.col("dst")).alias("dst"),
-        )
-        .distinct()
-    )
-    sym = (
-        canon.union(
-            canon.where(F.col("src") != F.col("dst")).select(
-                F.col("dst").alias("src"), F.col("src").alias("dst")
-            )
-        )
-        .repartition(n_part, "src")
-        .cache()
-    )
-    labels = sym.select(F.col("src").alias("id")).distinct().select("id", F.col("id").alias("component"))
-    labels = labels.transform(_ckpt)
-    changed = 0
-    for _ in range(max_iter):
-        nbr_min = (
-            sym.join(labels.withColumnRenamed("id", "dst").withColumnRenamed("component", "nbr"), "dst")
-            .groupBy("src")
-            .agg(F.min("nbr").alias("nbr"))
-        )
-        new_labels = (
-            labels.join(nbr_min.withColumnRenamed("src", "id"), "id", "left")
-            .select("id", F.least("component", F.coalesce("nbr", "component")).alias("component"))
-            .transform(_ckpt)  # flat lineage; also feeds the change count
-        )
-        changed = (
-            new_labels.join(labels.withColumnRenamed("component", "old"), "id")
-            .where(F.col("component") != F.col("old"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    sym.unpersist()
-    if changed > 0:
-        # Silent truncation would hand back WRONG cluster ids (a chain with
-        # diameter > max_iter leaves labels unconverged) -- fail loudly.
-        raise RuntimeError(
-            f"connected_components did not converge within {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter or use "
-            "connected_components_star (O(log n) rounds)"
-        )
-    return labels
 
 
 def _local_components(rows) -> list:
@@ -454,9 +352,9 @@ def connected_components_star(
     keyed by vertex id; edges are re-canonicalized + distinct'd each round
     so the edge set shrinks monotonically toward |V| - #components.
     Returns (id, component) for every vertex WITH a non-self-loop edge,
-    component = the smallest reachable id -- same contract as
-    connected_components except pure self-loop vertices are dropped with
-    their loops (callers pre-filter; edges_from_pairs never emits them).
+    component = the smallest reachable id.  Pure self-loop vertices are
+    dropped with their loops (callers pre-filter; edges_from_pairs never
+    emits them), and so are edges with a NULL endpoint.
 
     Small-graph fast path: dedup pair graphs are #near-dup-pairs-sized --
     typically tens of edges per million documents -- and each distributed
@@ -1137,7 +1035,6 @@ def hits(
     rounds: int = 3,
     quantum: int = 1_000_000,
     k: int = 20,
-    num_partitions: int | None = None,
     decode_id=None,
 ) -> DataFrame:
     """G15: HITS hubs & authorities (Kleinberg 1999) with EXACT-INTEGER
@@ -1176,8 +1073,7 @@ def hits(
     score_ppm) with deterministic (score desc, id asc) ranking, ordered by
     (role, rank).
     """
-    spark = edges.sparkSession
-    n_part = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions"))
+    n_part = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     e = (
         edges.select("src", "dst")
         .where(F.col("src").isNotNull() & F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))

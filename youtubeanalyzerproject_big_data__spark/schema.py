@@ -1,21 +1,13 @@
-"""Explicit schemas.
-
-Two families:
-
-1. The reference's own data model (SURVEY.md par.1): ``videos`` / ``users``
-   documents (YoutubeDataset_loader_final.py:16-53,55-72) plus the derived
-   ``edges`` and ``ratings`` shapes.  These are what a user of the reference
-   ingests; `sources.xml_ingest` produces them.
-2. The driver's synthetic benchmark tables (TESTDATA.md) used for
-   correctness/bench runs.  Parquet carries its own schema, so these are
-   declared as expected-column maps for validation, not imposed on read.
+"""Explicit schemas of the reference's own data model (SURVEY.md par.1):
+``videos`` / ``users`` documents (YoutubeDataset_loader_final.py:16-53,55-72).
+These are what a user of the reference ingests; `sources.xml_ingest`
+produces them.  The benchmark tables (TESTDATA.md) are Parquet and carry
+their own schema.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import types as T
-
-# --- reference data model -------------------------------------------------
 
 # videos collection, YoutubeDataset_loader_final.py:16-53.  Numeric fields use
 # a -1 sentinel on parse failure (":29-34"); the engine preserves that at
@@ -47,54 +39,3 @@ USERS_SCHEMA = T.StructType(
         T.StructField("friends", T.IntegerType(), True),
     ]
 )
-
-# derived graph edges, PageRank_Spark_v5.py:77-92.
-EDGES_SCHEMA = T.StructType(
-    [
-        T.StructField("src", T.StringType(), False),
-        T.StructField("dst", T.StringType(), False),
-    ]
-)
-
-# ALS ratings matrix, run_alsrecs_job.py:62-74.
-RATINGS_SCHEMA = T.StructType(
-    [
-        T.StructField("user_idx", T.IntegerType(), False),
-        T.StructField("item_idx", T.IntegerType(), False),
-        T.StructField("rating", T.DoubleType(), True),
-    ]
-)
-
-# --- driver benchmark tables (TESTDATA.md) --------------------------------
-
-TESTDATA_TABLES: dict[str, list[str]] = {
-    "region": ["r_regionkey", "r_name"],
-    "nation": ["n_nationkey", "n_name", "n_regionkey"],
-    "customer": ["c_custkey", "c_name", "c_nationkey", "c_acctbal", "c_mktsegment"],
-    "supplier": ["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    "part": ["p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice"],
-    "orders": [
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "o_orderdate",
-        "o_orderpriority",
-    ],
-    "lineitem": [
-        "l_orderkey",
-        "l_partkey",
-        "l_suppkey",
-        "l_linenumber",
-        "l_quantity",
-        "l_extendedprice",
-        "l_discount",
-        "l_tax",
-        "l_returnflag",
-        "l_linestatus",
-        "l_shipdate",
-    ],
-    "events": ["event_id", "ts", "user_id", "event_type", "value", "props"],
-    "documents": ["doc_id", "text", "lang", "source", "n_chars"],
-    "embeddings": ["vec_id", "embedding", "label"],
-}
